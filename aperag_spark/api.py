@@ -349,26 +349,9 @@ class CorpusEngine:
         )
 
     def _stage(self, name: str) -> DataFrame:
-        import json
-        import os
+        from aperag_spark.plans.pipeline import _read_stage
 
-        from aperag_spark.sources.io import read_table
-
-        path = os.path.join(self.out_dir, name)
-        # manifest-gated, not isdir-gated: a build() killed mid-write leaves
-        # a partial stage dir WITHOUT a manifest — serving it would silently
-        # truncate the corpus. The manifest is written only after a complete
-        # stage write (plans/pipeline._write_stage).
-        manifest = os.path.join(path, "_MANIFEST.json")
-        try:
-            with open(manifest) as f:
-                json.load(f)
-        except (OSError, json.JSONDecodeError):
-            raise ValueError(
-                f"stage '{name}' not built yet (no complete manifest) — "
-                "call build() first"
-            ) from None
-        return read_table(self.spark, path).drop("_pid")
+        return _read_stage(self.spark, self.out_dir, name)
 
     @property
     def minhash(self) -> DataFrame:
@@ -398,6 +381,6 @@ class CorpusEngine:
 
     def dedup_report(self) -> dict:
         """Per-stage lineage manifests (rows, partitions, fingerprints)."""
-        from aperag_spark.plans.corpus import corpus_pipeline_metrics
+        from aperag_spark.plans.pipeline import pipeline_metrics
 
-        return corpus_pipeline_metrics(self.out_dir)
+        return pipeline_metrics(self.out_dir)

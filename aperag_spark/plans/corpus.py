@@ -1,9 +1,10 @@
 """Staged, idempotently-resumable corpus-build pipeline — the training-data
-counterpart of plans/pipeline.py's KG runner, sharing its manifest machinery
+counterpart of plans/pipeline.py's KG pipeline, run by the same stage runner
 (stage table + _MANIFEST.json with input fingerprint / code version / row
-counts; a completed stage is skipped on rerun and read back, so a job killed
-mid-build resumes where it stopped with byte-identical stages —
-tests/test_corpus_pipeline.py mirrors tests/test_resume.py).
+counts read from the written files' footers; a completed stage is skipped on
+rerun and read back, so a job killed mid-build resumes where it stopped with
+byte-identical stages — tests/test_corpus_pipeline.py mirrors
+tests/test_resume.py). `plans.pipeline.pipeline_metrics` reads its manifests.
 
 Stage graph (linear; shuffle boundaries marked *):
 
@@ -17,11 +18,9 @@ whole MinHash+LSH+CC subplan each (the round-4 battery ran it three times —
 candidates/cluster/select). A real 100 TB corpus build materializes the
 dedup verdict once and has every consumer read the stage table; this runner
 is that materialization, and queries.py's battery entries read through it
-via a session-scoped cache."""
+(queries._corpus_stage)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,11 +32,7 @@ from aperag_spark.operators.corpus import (
     quality_filter,
     select_verdict,
 )
-from aperag_spark.plans.pipeline import (
-    _read_stage,
-    _stage_is_complete,
-    _write_stage,
-)
+from aperag_spark.plans.pipeline import _stage_runner
 
 CORPUS_STAGES = ["minhash", "candidates", "clusters", "verdicts"]
 
@@ -57,18 +52,7 @@ def run_corpus_pipeline(
     from aperag_spark.queries import ensure_package_shipped
 
     ensure_package_shipped(spark)  # the minhash stage is an Arrow UDF
-    os.makedirs(out_dir, exist_ok=True)
-    results: dict[str, DataFrame] = {}
-
-    def stage(name: str, build):
-        if _stage_is_complete(out_dir, name, input_fingerprint):
-            results[name] = _read_stage(spark, out_dir, name)
-        else:
-            results[name] = _write_stage(build(), out_dir, name, input_fingerprint)
-        if fail_after_stage == name:
-            raise RuntimeError(f"injected failure after stage {name}")
-        return results[name]
-
+    results, stage = _stage_runner(spark, out_dir, input_fingerprint, fail_after_stage)
     idx = CORPUS_STAGES.index(upto)
     md = stage("minhash", lambda: minhash_docs(docs))
     if idx >= 1:
@@ -88,16 +72,3 @@ def run_corpus_pipeline(
             "verdicts", lambda: select_verdict(quality_filter(docs), clusters)
         )
     return results
-
-
-def corpus_pipeline_metrics(out_dir: str) -> dict:
-    """Collect stage manifests (the per-partition lineage record)."""
-    import json
-
-    out = {}
-    for s in CORPUS_STAGES:
-        mp = os.path.join(out_dir, s, "_MANIFEST.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                out[s] = json.load(f)
-    return out

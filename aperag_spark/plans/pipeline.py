@@ -4,11 +4,13 @@ stage outputs and per-partition lineage manifests.
 This replaces the reference's reconciler compare-and-set claims
 (aperag/index/reconciler.py:67-169) as the resume/idempotency mechanism:
 each stage writes its output table plus a _MANIFEST.json recording the input
-fingerprint, code version, row count, and per-partition row counts. On rerun,
+fingerprint, code version, row count, and per-partition row counts (read
+from the written files' metadata, so a stage write launches no job beyond
+the write itself: no re-read or count job). On rerun,
 a stage whose manifest matches its input fingerprint is skipped and its
 output is read back — so a job killed between stages resumes where it
 stopped and reproduces byte-identical outputs (tested in
-tests/test_resume.py).
+tests/test_resume.py). A stage without a complete manifest is never read.
 
 Storage: Iceberg at production scale (`MERGE INTO` / snapshot overwrite per
 SURVEY.md §2.1 S5); the sandbox has no Iceberg runtime jar, so the writer
@@ -26,11 +28,11 @@ Stage graph (shuffle boundaries marked *):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from aperag_spark import __version__
@@ -43,30 +45,34 @@ from aperag_spark.operators.merge import (
     merge_relations,
     stub_missing_endpoints,
 )
+from aperag_spark.sources.io import partition_rows, read_table, write_table
 
 
 def _manifest_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, stage, "_MANIFEST.json")
 
 
+def _manifest(out_dir: str, stage: str) -> dict | None:
+    """The stage's manifest, or None if it has no complete one."""
+    try:
+        with open(_manifest_path(out_dir, stage)) as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+
+
 def _write_stage(
     df: DataFrame, out_dir: str, stage: str, input_fingerprint: str
 ) -> DataFrame:
-    """Write stage output + lineage manifest; return re-read DataFrame so
+    """Write stage output + lineage manifest; return the table read back so
     downstream stages consume the materialized (checkpointed) table, cutting
-    lineage exactly at stage boundaries."""
-    from aperag_spark.sources.io import read_table, write_table
-
+    lineage exactly at stage boundaries. Row counts come from the written
+    files' metadata, so no re-read or count job follows the write."""
     spark = df.sparkSession
     path = os.path.join(out_dir, stage)
     t0 = time.time()
-    with_pid = df.withColumn("_pid", F.spark_partition_id())
-    write_table(with_pid, path)
-    written = read_table(spark, path)
-    per_partition = {
-        str(r["_pid"]): r["cnt"]
-        for r in written.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
+    written = write_table(df, path)
+    per_partition = partition_rows(spark, path)
     manifest = {
         "stage": stage,
         "rows": sum(per_partition.values()),
@@ -78,40 +84,43 @@ def _write_stage(
     }
     with open(_manifest_path(out_dir, stage), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
-    return written.drop("_pid")
+    return written
 
 
 def _stage_is_complete(out_dir: str, stage: str, input_fingerprint: str) -> bool:
-    mp = _manifest_path(out_dir, stage)
-    if not os.path.exists(mp):
-        return False
-    try:
-        with open(mp) as f:
-            m = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return False
+    m = _manifest(out_dir, stage)
     return (
-        m.get("input_fingerprint") == input_fingerprint
+        m is not None
+        and m.get("input_fingerprint") == input_fingerprint
         and m.get("code_version") == __version__
     )
 
 
 def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    from aperag_spark.sources.io import read_table
+    """Manifest-gated, not directory-gated: a run killed mid-write leaves a
+    partial stage directory without a manifest; serving it would truncate."""
+    if _manifest(out_dir, stage) is None:
+        raise ValueError(f"stage '{stage}' not built yet (no complete manifest in {out_dir})")
+    return read_table(spark, os.path.join(out_dir, stage))
 
-    return read_table(spark, os.path.join(out_dir, stage)).drop("_pid")
 
+def _stage_runner(spark: SparkSession, out_dir: str, input_fingerprint: str, fail_after_stage):
+    """The KG and corpus pipelines' stage runner: `stage(name, build)` reads
+    back a stage whose manifest matches, else writes `build()`; both land in
+    `results`. `fail_after_stage` simulates a crash after that stage."""
+    os.makedirs(out_dir, exist_ok=True)
+    results: dict[str, DataFrame] = {}
 
-STAGES = [
-    "texts",
-    "chunks",
-    "mentions",
-    "entities",
-    "relations",
-    "alias_map",
-    "entities_canonical",
-    "relations_canonical",
-]
+    def stage(name: str, build):
+        if _stage_is_complete(out_dir, name, input_fingerprint):
+            results[name] = _read_stage(spark, out_dir, name)
+        else:
+            results[name] = _write_stage(build(), out_dir, name, input_fingerprint)
+        if fail_after_stage == name:
+            raise RuntimeError(f"injected failure after stage {name}")
+        return results[name]
+
+    return results, stage
 
 
 def run_pipeline(
@@ -130,18 +139,7 @@ def run_pipeline(
     id; in tests, the (seed, n) of the generator). `fail_after_stage`
     simulates a mid-job crash for the resume test.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    results: dict[str, DataFrame] = {}
-
-    def stage(name: str, build):
-        if _stage_is_complete(out_dir, name, input_fingerprint):
-            results[name] = _read_stage(spark, out_dir, name)
-        else:
-            results[name] = _write_stage(build(), out_dir, name, input_fingerprint)
-        if fail_after_stage == name:
-            raise RuntimeError(f"injected failure after stage {name}")
-        return results[name]
-
+    results, stage = _stage_runner(spark, out_dir, input_fingerprint, fail_after_stage)
     if fuse_narrow:
         # one narrow stage pages→mentions (everything per-page local); skips
         # the texts/chunks checkpoints — use when resume granularity at those
@@ -180,11 +178,9 @@ def run_pipeline(
 
 
 def pipeline_metrics(out_dir: str) -> dict:
-    """Collect stage manifests (the per-partition lineage record)."""
-    out = {}
-    for s in STAGES:
-        mp = _manifest_path(out_dir, s)
-        if os.path.exists(mp):
-            with open(mp) as f:
-                out[s] = json.load(f)
-    return out
+    """Collect the stage manifests (the per-partition lineage record) of a
+    KG or corpus pipeline run: every `<out_dir>/<stage>/_MANIFEST.json`
+    that `_write_stage` completed."""
+    paths = glob.glob(_manifest_path(glob.escape(out_dir), "*"))
+    stages = sorted(os.path.basename(os.path.dirname(p)) for p in paths)
+    return {s: m for s in stages if (m := _manifest(out_dir, s))}

@@ -22,6 +22,8 @@ tests/test_parity.py and bench.py.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable, Iterator
 
 import pyspark.sql.functions as F
@@ -37,6 +39,7 @@ from aperag_spark.operators.corpus import (
     STOPWORDS,
 )
 from aperag_spark.operators.windows import rank_bounded
+from aperag_spark.session import session_memo
 from pyspark.sql import DataFrame, SparkSession, Window
 
 # The tokenizer regex, shared verbatim with the DuckDB oracles (RE2 and Java
@@ -51,45 +54,74 @@ CHUNK_OVERLAP = 10
 MIN_WORD_LEN = 4
 
 
-_SHIPPED_SESSIONS: set[int] = set()
+@functools.cache
+def _package_zip() -> str:
+    """aperag_spark's sources zipped once per process, for addPyFile; the
+    zip is removed at interpreter exit."""
+    import atexit
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(pkg_dir)
+    zpath = os.path.join("/tmp", f"aperag_spark_pyfiles_{os.getpid()}.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    z.write(full, os.path.relpath(full, repo))
+    atexit.register(os.remove, zpath)
+    return zpath
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Ship aperag_spark to executor Python workers via addPyFile — robust
     even when the caller (e.g. the round driver) built its own SparkSession
     without PYTHONPATH/--py-files. addPyFile works post-start; zipping is
-    cached per process, registration per session."""
-    if id(spark) in _SHIPPED_SESSIONS:
-        return
-    import os
-    import zipfile
+    done once per process, registration once per session."""
+    session_memo(spark, "package_shipped", lambda: spark.sparkContext.addPyFile(_package_zip()))
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    repo = os.path.dirname(pkg_dir)
-    zpath = os.path.join("/tmp", f"aperag_spark_pyfiles_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        z.write(full, os.path.relpath(full, repo))
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_SESSIONS.add(id(spark))
+
+def _corpus_key(sf_dir: str) -> str:
+    """Identity of the corpus under sf_dir: absolute path + CONTENT identity
+    of documents.parquet (total size + newest mtime). Keys the session memo
+    and the corpus stage manifests: /tmp outlives processes and pids recycle,
+    so a regenerated table must not be served from a stale entry because the
+    path still matches, and a copy at a new path starts cold."""
+    key = os.path.abspath(sf_dir)
+    try:
+        stats = _file_stats(os.path.join(key, "documents.parquet"))
+    except OSError:
+        stats = []
+    newest = max((st.st_mtime_ns for st in stats), default=0)
+    return f"{key}|{sum(st.st_size for st in stats)}|{newest}"
+
+
+def _file_stats(path: str) -> list[os.stat_result]:
+    """os.stat of every file of a table: the file itself, or each file under
+    the table directory."""
+    if os.path.isdir(path):
+        return [os.stat(os.path.join(r, f)) for r, _d, fs in os.walk(path) for f in fs]
+    return [os.stat(path)]
+
+
+def _memo_per_corpus(build: Callable[[SparkSession, str], object]):
+    """Memoize a (spark, sf_dir) frame builder per session and corpus
+    (`_corpus_key`): every battery consumer of a shared, lazily
+    checkpointed frame reuses one execution of it."""
+
+    @functools.wraps(build)
+    def memoized(spark, sf_dir):
+        key = (build.__name__, _corpus_key(sf_dir))
+        return session_memo(spark, key, lambda: build(spark, sf_dir))
+
+    return memoized
 
 
 # Tables whose consumers do heavy NARROW per-row work fused onto the scan
 # (explodes, Arrow kernels, HOF projections, GEMM packing) → key column used
 # for the deterministic spread repartition.
 _SPREAD_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
-
-
-def _parse_bytes(v: str) -> int:
-    v = str(v).strip().lower()
-    for suf, mul in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suf + "b") or v.endswith(suf):
-            return int(float(v.rstrip("b").rstrip(suf))) * mul
-    return int(v)
 
 
 def _spread_scan(spark: SparkSession, df: DataFrame, path: str, key: str) -> DataFrame:
@@ -102,20 +134,11 @@ def _spread_scan(spark: SparkSession, df: DataFrame, path: str, key: str) -> Dat
     narrow compute uses every core; the exchange moves only a few MB. At
     production scale (bytes >> maxPartitionBytes · cores) the condition
     never fires and the scan keeps its natural splits."""
-    import os
-
     try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            size = os.path.getsize(path)
+        size = sum(st.st_size for st in _file_stats(path))
     except OSError:
         return df
-    mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     par = spark.sparkContext.defaultParallelism
     if (size + mpb - 1) // mpb >= par:
         return df
@@ -141,24 +164,15 @@ def _words(col="text"):
 # ---------------------------------------------------------------------------
 
 
-_KG_CHUNKS_CACHE: dict = {}
-
-
+@_memo_per_corpus
 def q_kg_chunking(spark, sf_dir):
     """C1 chunker (operate.py:71-115 semantics) over documents.text with the
     production window/stride logic at corpus-appropriate size. The chunk
     frame feeds kg_chunk_ids and kg_token_budget too — lazily checkpointed
     per (session, corpus) so the mapInPandas chunker runs once."""
-    import os
-
     import pandas as pd
 
     from aperag_spark.textproc import Tokenizer, chunking_by_token_size
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _KG_CHUNKS_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -184,11 +198,9 @@ def q_kg_chunking(spark, sf_dir):
                 rows, columns=["doc_id", "chunk_order_index", "tokens", "content"]
             )
 
-    out = docs.mapInPandas(
+    return docs.mapInPandas(
         _chunk, "doc_id bigint, chunk_order_index int, tokens int, content string"
     ).localCheckpoint(eager=False)
-    _KG_CHUNKS_CACHE[key] = out
-    return out
 
 
 _STRIDE = CHUNK_SIZE - CHUNK_OVERLAP
@@ -336,9 +348,7 @@ _SQL_BIGRAM_EDGES = f"""
 """
 
 
-_KG_RELATIONS_CACHE: dict = {}
-
-
+@_memo_per_corpus
 def q_kg_relations(spark, sf_dir):
     """M9 edge merge: weight = SUM of occurrences (operate.py:406),
     provenance = distinct doc count. FIVE downstream queries (degree,
@@ -346,13 +356,7 @@ def q_kg_relations(spark, sf_dir):
     frame — lazily checkpointed per (session, corpus) so each battery
     consumer reuses one execution (same pattern as the BM25/simhash
     caches)."""
-    import os
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _KG_RELATIONS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+    return (
         _bigram_edges(spark, sf_dir)
         .groupBy("src", "tgt")
         .agg(
@@ -361,8 +365,6 @@ def q_kg_relations(spark, sf_dir):
         )
         .localCheckpoint(eager=False)
     )
-    _KG_RELATIONS_CACHE[key] = out
-    return out
 
 
 ORACLE_KG_RELATIONS = f"""
@@ -833,9 +835,10 @@ def q_kg_curated_merge(spark, sf_dir):
     # the target through rewiring — so both merges run on the named slice
     # only (value-identical to merging the full corpus first; the DuckDB
     # oracle computes the full-corpus form)
-    # merge_entities aggregates its input twice (fragment merge + type
-    # vote); checkpoint the tiny named slice so the 5M-row mention explode
-    # runs once for it, not twice
+    # merge_entities aggregates its input once, at (name, type), and
+    # checkpoints that aggregate itself; the named slice is checkpointed
+    # too, so the 5M-row mention explode behind it is materialized once as
+    # a three-name table before the merge plan reads it
     em_named = em.where(F.col("entity_name").isin(named)).localCheckpoint(eager=False)
     ents = merge_entities(em_named)
     rm = _word_relation_mentions(spark, sf_dir, 0, 10**9)
@@ -1086,48 +1089,63 @@ _SQL_SHINGLES = """
 """
 
 
+_STAGE_STORE_PREFIX = "aperag_corpus_stages_"
+
+
+@functools.cache
+def _stage_store() -> str:
+    """This process's corpus stage store, `aperag_corpus_stages_<pid>` on
+    tmpfs when available — same convention as bench.py's KG stage outputs
+    (the stage store at cluster scale is a distributed filesystem; this
+    sandbox's disk-backed /tmp has bursty write latency that lands entirely
+    on the biggest stage write). First use sweeps the stores of dead
+    processes; the store is removed at interpreter exit."""
+    import atexit
+    import shutil
+    import tempfile
+
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    _sweep_dead_stage_stores(base)
+    path = os.path.join(base, f"{_STAGE_STORE_PREFIX}{os.getpid()}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def _sweep_dead_stage_stores(base: str) -> None:
+    """Remove the stage stores under `base` whose process is gone."""
+    import shutil
+
+    for name in os.listdir(base):
+        pid = name.removeprefix(_STAGE_STORE_PREFIX)
+        if pid == name or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except PermissionError:  # alive, owned by another user
+            pass
+
+
 def _corpus_stage(spark, sf_dir, stage: str) -> DataFrame:
-    """Read `stage` from the session-scoped STAGED corpus pipeline for
-    sf_dir (plans/corpus.py), building missing prefix stages on first use.
+    """Read `stage` from the STAGED corpus pipeline for sf_dir
+    (plans/corpus.py), building missing prefix stages on first use.
     The battery's dedup consumers (signatures / candidates / cluster /
     select) share ONE materialization of the MinHash+LSH+CC chain instead
     of re-executing it per query — the same staged-write treatment the KG
     side gets from plans/pipeline.py, which is exactly what a 100 TB corpus
     build does (materialize the dedup verdict once, every consumer reads
-    the stage table). Manifest checks make rebuilds no-ops; the stage dir
-    is keyed by pid + corpus path, so parallel drivers don't collide."""
-    import os
+    the stage table). Manifest checks (fingerprint = `_corpus_key`) make
+    rebuilds no-ops; the store is per process, so parallel drivers don't
+    collide."""
     import re
-    import tempfile
 
     from aperag_spark.plans.corpus import run_corpus_pipeline
 
-    key = os.path.abspath(sf_dir)
-    doc_path = os.path.join(key, "documents.parquet")
-    # fingerprint = path + corpus CONTENT identity (total size + newest
-    # mtime): /tmp outlives processes and pids recycle, so a stale stage
-    # dir must invalidate when documents.parquet is regenerated, not be
-    # served because the path still matches.
-    total, newest = 0, 0
-    if os.path.isdir(doc_path):
-        for root, _dirs, files in os.walk(doc_path):
-            for fn in files:
-                st = os.stat(os.path.join(root, fn))
-                total += st.st_size
-                newest = max(newest, st.st_mtime_ns)
-    elif os.path.exists(doc_path):
-        st = os.stat(doc_path)
-        total, newest = st.st_size, st.st_mtime_ns
-    fingerprint = f"{key}|{total}|{newest}"
-    # stage tables on tmpfs when available — same convention as bench.py's
-    # KG stage outputs (the stage store at cluster scale is a distributed
-    # filesystem; this sandbox's disk-backed /tmp has bursty write latency
-    # that lands entirely on the biggest stage write)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    fingerprint = _corpus_key(sf_dir)
     out_dir = os.path.join(
-        base,
-        f"aperag_corpus_stages_{os.getpid()}",
-        re.sub(r"[^A-Za-z0-9._-]+", "_", key).strip("_"),
+        _stage_store(),
+        re.sub(r"[^A-Za-z0-9._-]+", "_", os.path.abspath(sf_dir)).strip("_"),
     )
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     res = run_corpus_pipeline(
@@ -1491,9 +1509,7 @@ WHERE jaccard >= {NGRAM_JACCARD_T}
 """
 
 
-_SIMHASH_FP_CACHE: dict = {}
-
-
+@_memo_per_corpus
 def q_dedup_simhash(spark, sf_dir):
     """32-bit SimHash fingerprint per doc: per-word 32-bit hash
     (md5-derived, portable), occurrence-weighted bit vote, vote sign →
@@ -1510,12 +1526,6 @@ def q_dedup_simhash(spark, sf_dir):
     The fingerprint frame is lazily checkpointed per (session, corpus):
     the banding/verify query derives from the identical frame, so the two
     consumers share one execution (same pattern as the BM25 index cache)."""
-    import os
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _SIMHASH_FP_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = _t(spark, sf_dir, "documents")
     occ = (
         docs.select("doc_id", F.explode(_words()).alias("w"))
@@ -1536,12 +1546,10 @@ def q_dedup_simhash(spark, sf_dir):
             for b in range(32)
         )
     )
-    out = votes.select(
+    return votes.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         fingerprint.cast("bigint").alias("simhash"),
     ).localCheckpoint(eager=False)
-    _SIMHASH_FP_CACHE[key] = out
-    return out
 
 
 ORACLE_DEDUP_SIMHASH = """
@@ -2270,38 +2278,28 @@ FT_KEYWORDS = ["vector", "join", "scan"]
 FT_TOPK = 20
 
 
-_BM25_INDEX_CACHE: dict = {}
-
-
+@_memo_per_corpus
 def _fulltext_index_cached(spark, sf_dir) -> dict:
     """Session-scoped shared BM25 index: fulltext_bm25 and hybrid_rrf derive
     IDENTICAL postings/doclens tables from `documents` — build once per
     (session, corpus), lazily checkpoint, reuse. (Checkpointing for a single
     consumer measured as a small loss in round 2; the win is the second
     consumer — interleaved A/B in BENCH.md round 5.)"""
-    import os
-
     from aperag_spark.operators.fulltext import build_fulltext_index
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _BM25_INDEX_CACHE.get(key)
-    if idx is None:
-        docs = _t(spark, sf_dir, "documents")
-        built = build_fulltext_index(docs, "doc_id", "text")
-        # checkpoint postings FIRST and re-derive doclens from the
-        # checkpointed frame (dl = Σ tf per id, the operator's own
-        # derivation): checkpointing the dict values independently would
-        # leave doclens' lineage pointing at the raw explode, re-running
-        # the analyze pass on materialization.
-        postings = built["postings"].localCheckpoint(eager=False)
-        doclens = (
-            postings.groupBy("id")
-            .agg(F.sum("tf").alias("dl"))
-            .localCheckpoint(eager=False)
-        )
-        idx = {"postings": postings, "doclens": doclens}
-        _BM25_INDEX_CACHE[key] = idx
-    return idx
+    docs = _t(spark, sf_dir, "documents")
+    built = build_fulltext_index(docs, "doc_id", "text")
+    # checkpoint postings FIRST and re-derive doclens from the checkpointed
+    # frame (dl = Σ tf per id, the operator's own derivation): checkpointing
+    # the dict values independently would leave doclens' lineage pointing
+    # at the raw explode, re-running the analyze pass on materialization.
+    postings = built["postings"].localCheckpoint(eager=False)
+    doclens = (
+        postings.groupBy("id")
+        .agg(F.sum("tf").alias("dl"))
+        .localCheckpoint(eager=False)
+    )
+    return {"postings": postings, "doclens": doclens}
 
 
 def q_fulltext_bm25(spark, sf_dir):

@@ -64,3 +64,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def session_memo(spark: SparkSession, key, build):
+    """`build()`, computed once per session and key. The memo is held by the
+    session object itself, so a new session starts empty and nothing
+    outlives the session it was built in."""
+    memo = vars(spark).setdefault("_aperag_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

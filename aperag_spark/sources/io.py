@@ -17,6 +17,7 @@ Everything above this module (stages, manifests, resume) is format-agnostic.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,9 +49,10 @@ def _default_ident(location: str) -> str:
     return f"local.db.{os.path.basename(loc)}_{tag}"
 
 
-def write_table(df: DataFrame, location: str, table_name: str | None = None) -> None:
-    """Write a stage output. `location` is a directory (parquet mode) and
-    `table_name` a catalog identifier (iceberg mode)."""
+def write_table(df: DataFrame, location: str, table_name: str | None = None) -> DataFrame:
+    """Write a stage output and return it read back (parquet: with the frame's
+    schema, so no inference job). `location` is a directory (parquet mode)
+    and `table_name` a catalog identifier (iceberg mode)."""
     if table_format() == "iceberg":
         spark = df.sparkSession
         if not iceberg_available(spark):
@@ -62,11 +64,34 @@ def write_table(df: DataFrame, location: str, table_name: str | None = None) -> 
         df.writeTo(table_name or _default_ident(location)).using(
             "iceberg"
         ).createOrReplace()
-    else:
-        df.write.mode("overwrite").parquet(location)
+        return read_table(spark, location, table_name)
+    df.write.mode("overwrite").parquet(location)
+    return df.sparkSession.read.schema(df.schema).parquet(location)
 
 
 def read_table(spark: SparkSession, location: str, table_name: str | None = None) -> DataFrame:
     if table_format() == "iceberg":
         return spark.read.table(table_name or _default_ident(location))
     return spark.read.parquet(location)
+
+
+def partition_rows(spark: SparkSession, location: str) -> dict[str, int]:
+    """Rows per written partition from file metadata, not a scan: parquet
+    footers or Iceberg's `files` table, keyed by the partition number that
+    starts each data file's name (`part-00003-…`, Iceberg `00003-…`)."""
+    if table_format() == "iceberg":
+        files = spark.read.table(f"{_default_ident(location)}.files")
+        entries = [tuple(r) for r in files.select("file_path", "record_count").collect()]
+    else:
+        import pyarrow.parquet as pq
+
+        entries = [
+            (f, pq.read_metadata(os.path.join(location, f)).num_rows)
+            for f in os.listdir(location)
+            if f.startswith("part-")
+        ]
+    out: dict[str, int] = {}
+    for f, n in entries:
+        part = str(int(re.match(r"(?:part-)?(\d+)", os.path.basename(f)).group(1)))
+        out[part] = out.get(part, 0) + n
+    return out

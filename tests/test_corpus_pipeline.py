@@ -9,11 +9,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from aperag_spark.plans.corpus import (
-    CORPUS_STAGES,
-    corpus_pipeline_metrics,
-    run_corpus_pipeline,
-)
+from aperag_spark.plans.corpus import CORPUS_STAGES, run_corpus_pipeline
+from aperag_spark.plans.pipeline import pipeline_metrics
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,7 +20,7 @@ def _docs(spark):
 
 
 def _table_hash(spark, path):
-    rows = sorted(map(str, spark.read.parquet(path).drop("_pid").collect()))
+    rows = sorted(map(str, spark.read.parquet(path).collect()))
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
@@ -107,7 +104,7 @@ def test_stages_match_battery_queries(spark, tmp_path):
 def test_metrics_record_lineage(spark, tmp_path):
     out = str(tmp_path / "lineage")
     run_corpus_pipeline(spark, _docs(spark), out, input_fingerprint="v")
-    m = corpus_pipeline_metrics(out)
+    m = pipeline_metrics(out)
     assert set(m) == set(CORPUS_STAGES)
     for stage in CORPUS_STAGES:
         assert m[stage]["rows"] == sum(m[stage]["partitions"].values())
@@ -143,3 +140,55 @@ def test_corpus_engine_facade(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not built yet"):
         CorpusEngine(spark, str(tmp_path / "empty")).verdicts.count()
+
+
+def test_session_memo_per_session_and_corpus(spark, tmp_path):
+    """Shared battery frames are memoized on the session object, keyed by
+    corpus identity: a new session, or a copy of the tables at another
+    path, starts cold."""
+    import shutil
+
+    from aperag_spark.queries import q_kg_relations
+
+    copy = tmp_path / "copy"
+    copy.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", copy)
+    first = q_kg_relations(spark, SF_DIR)
+    assert q_kg_relations(spark, SF_DIR) is first
+    assert q_kg_relations(spark, str(copy)) is not first
+    assert q_kg_relations(spark.newSession(), SF_DIR) is not first
+
+
+def test_dead_process_stage_stores_are_swept(tmp_path):
+    import subprocess
+
+    from aperag_spark.queries import _STAGE_STORE_PREFIX, _sweep_dead_stage_stores
+
+    child = subprocess.Popen(["true"])
+    child.wait()  # reaped: its pid is dead
+    dead = tmp_path / f"{_STAGE_STORE_PREFIX}{child.pid}"
+    live = tmp_path / f"{_STAGE_STORE_PREFIX}{os.getpid()}"
+    for store in (dead, live):
+        (store / "minhash").mkdir(parents=True)
+    _sweep_dead_stage_stores(str(tmp_path))
+    assert not dead.exists() and live.exists()
+
+
+def test_process_scratch_removed_at_exit():
+    """The per-process stage store and package zip go away with the
+    interpreter that made them."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from aperag_spark.queries import _package_zip, _stage_store\n"
+        "os.makedirs(_stage_store())\n"
+        "print(_stage_store(), _package_zip())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout.split()
+    assert len(out) == 2
+    assert not any(os.path.exists(p) for p in out)

@@ -3,11 +3,13 @@ the canonical RAG flow end-to-end over a real KGEngine corpus, with group
 ordering checked against the REFERENCE'S OWN _find_parallel_groups /
 _topological_sort — AST-extracted from the source file and executed live
 (the package import chain needs jinja2/nebula3 absent here) — plus cycle
-detection and variable-resolution failure modes."""
+detection and variable-resolution failure modes. The reference-comparison
+tests skip when the reference checkout is absent."""
 
 from __future__ import annotations
 
 import ast
+import os
 import textwrap
 from types import SimpleNamespace
 
@@ -52,13 +54,20 @@ def _load_reference_grouping():
     return ns["_topological_sort"], ns["_find_parallel_groups"]
 
 
-REF_TOPO, REF_GROUPS = _load_reference_grouping()
+@pytest.fixture(scope="module")
+def ref():
+    """(topological_sort, find_parallel_groups) of the reference, loaded on
+    first use; tests that compare against it skip without the checkout."""
+    if not os.path.exists(REF_ENGINE):
+        pytest.skip("reference checkout not present")
+    return _load_reference_grouping()
 
 
-def _ref_groups(flow: FlowInstance):
+def _ref_groups(ref, flow: FlowInstance):
+    ref_topo, ref_groups = ref
     shim = SimpleNamespace(nodes=flow.nodes, edges=flow.edges)
-    ordered = REF_TOPO(None, shim)
-    return REF_GROUPS(None, shim, ordered)
+    ordered = ref_topo(None, shim)
+    return ref_groups(None, shim, ordered)
 
 
 @pytest.fixture(scope="module")
@@ -69,16 +78,24 @@ def kg(spark, tmp_path_factory):
     return eng
 
 
-def test_canonical_flow_end_to_end(kg):
+def _run_canonical_flow(kg):
     flow = canonical_rag_flow()
     flow.validate()
     engine = FlowEngine(services={"kg": kg})
     outputs = engine.execute_flow(
         flow, {"query": "What is Acme0 Corp known for in cloud energy partnership?"}
     )
+    return flow, engine, outputs
 
+
+def test_canonical_flow_groups_match_reference(kg, ref):
+    flow, engine, _ = _run_canonical_flow(kg)
     # group ordering == the reference's own algorithm, executed live
-    assert engine.groups == _ref_groups(flow)
+    assert engine.groups == _ref_groups(ref, flow)
+
+
+def test_canonical_flow_end_to_end(kg):
+    flow, engine, outputs = _run_canonical_flow(kg)
     assert engine.groups == [
         {"start"},
         {"vector_search", "fulltext_search", "graph_search"},
@@ -173,14 +190,14 @@ def test_llm_node_char_budget():
         )
 
 
-def test_cycle_detection_matches_reference():
+def test_cycle_detection_matches_reference(ref):
     flow = canonical_rag_flow()
     flow.edges.append(Edge("rerank", "start"))
     with pytest.raises(CycleError):
         flow.validate()
     shim = SimpleNamespace(nodes=flow.nodes, edges=flow.edges)
     with pytest.raises(Exception, match="cycle"):
-        REF_TOPO(None, shim)
+        ref[0](None, shim)
     # self-loop variant
     loop = FlowInstance(
         "loop", "loop", {"a": NodeInstance("a", "start")}, [Edge("a", "a")]
@@ -189,7 +206,7 @@ def test_cycle_detection_matches_reference():
         topological_sort(loop)
 
 
-def test_parallel_grouping_matches_reference_on_random_dags():
+def test_parallel_grouping_matches_reference_on_random_dags(ref):
     """Property check: on a family of random DAGs the level grouping equals
     the reference's, group by group."""
     import random
@@ -206,7 +223,7 @@ def test_parallel_grouping_matches_reference_on_random_dags():
             if rng.random() < 0.35
         ]
         flow = FlowInstance(f"t{trial}", "t", nodes, edges)
-        assert find_parallel_groups(flow, topological_sort(flow)) == _ref_groups(flow)
+        assert find_parallel_groups(flow, topological_sort(flow)) == _ref_groups(ref, flow)
 
 
 def test_unresolvable_variable_raises():

@@ -8,12 +8,15 @@ file (the package import graph needs nebula3/redis drivers absent here)
 and exec'd with the reference's GRAPH_FIELD_SEP. join_unique is compared
 SET-wise — the reference joins a Python set, whose order is run-dependent;
 our port emits sorted order (the documented deterministic refinement).
+The reference-comparison tests skip when the reference checkout is absent.
 """
 
 from __future__ import annotations
 
 import ast
+import os
 import re
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 import pytest
@@ -35,17 +38,27 @@ def _load_reference_mergers():
             # function bodies only use builtins + GRAPH_FIELD_SEP
             exec(compile(ast.fix_missing_locations(mod), REF_UTILS_GRAPH, "exec"), ns)
     assert wanted <= set(ns), "reference merge functions not found"
-    return ns["_merge_entity_attributes"], ns["_merge_relation_attributes"], sep
+    return SimpleNamespace(
+        entity_merge=ns["_merge_entity_attributes"],
+        relation_merge=ns["_merge_relation_attributes"],
+        sep=sep,
+    )
 
 
-REF_ENTITY_MERGE, REF_RELATION_MERGE, REF_SEP = _load_reference_mergers()
+@pytest.fixture(scope="module")
+def reference():
+    """The reference's merge functions and GRAPH_FIELD_SEP, loaded on first
+    use; tests that compare against them skip without the checkout."""
+    if not os.path.exists(REF_UTILS_GRAPH):
+        pytest.skip("reference checkout not present")
+    return _load_reference_mergers()
 
 
-def _agree(mine: dict, ref: dict, strategy: dict):
+def _agree(mine: dict, ref: dict, strategy: dict, sep: str):
     assert set(mine) == set(ref)
     for k in ref:
         if strategy.get(k, "keep_first") == "join_unique":
-            assert set(str(mine[k]).split(REF_SEP)) == set(str(ref[k]).split(REF_SEP)), k
+            assert set(str(mine[k]).split(sep)) == set(str(ref[k]).split(sep)), k
         else:
             assert mine[k] == ref[k], k
 
@@ -75,15 +88,16 @@ ENTITY_STRATEGIES = [
 ]
 
 
-def test_entity_merge_matrix_vs_reference():
+def test_entity_merge_matrix_vs_reference(reference):
     for data_list in ENTITY_CASES:
         for strategy in ENTITY_STRATEGIES:
             from aperag_spark.operators.maintenance import merge_entity_attributes
 
             _agree(
                 merge_entity_attributes(data_list, strategy),
-                REF_ENTITY_MERGE(data_list, strategy),
+                reference.entity_merge(data_list, strategy),
                 strategy,
+                reference.sep,
             )
 
 
@@ -107,15 +121,16 @@ RELATION_STRATEGIES = [
 ]
 
 
-def test_relation_merge_matrix_vs_reference():
+def test_relation_merge_matrix_vs_reference(reference):
     for data_list in RELATION_CASES:
         for strategy in RELATION_STRATEGIES:
             from aperag_spark.operators.maintenance import merge_relation_attributes
 
             _agree(
                 merge_relation_attributes(data_list, strategy),
-                REF_RELATION_MERGE(data_list, strategy),
+                reference.relation_merge(data_list, strategy),
                 strategy,
+                reference.sep,
             )
 
 
@@ -158,7 +173,7 @@ def graph(spark):
     return ents, rels
 
 
-def test_merge_entities_curated_matches_reference_semantics(graph):
+def test_merge_entities_curated_matches_reference_semantics(graph, reference):
     from aperag_spark.operators.maintenance import (
         ENTITY_MERGE_DEFAULT_STRATEGY,
         merge_entities_curated,
@@ -178,10 +193,10 @@ def test_merge_entities_curated_matches_reference_semantics(graph):
         {"entity_type": "ORG", "description": "the maker", "source_id": "c2", "file_path": "u2"},
         {"entity_type": "ORG", "description": "maker", "source_id": "c1", "file_path": "u1"},
     ]
-    ref = REF_ENTITY_MERGE(ref_in, ENTITY_MERGE_DEFAULT_STRATEGY)
+    ref = reference.entity_merge(ref_in, ENTITY_MERGE_DEFAULT_STRATEGY)
     assert tgt["description"] == ref["description"]
     assert tgt["entity_type"] == ref["entity_type"]
-    assert set(tgt["source_ids"]) == set(ref["source_id"].split(REF_SEP))
+    assert set(tgt["source_ids"]) == set(ref["source_id"].split(reference.sep))
     assert tgt["mention_count"] == 5
     assert set(tgt["alias_names"]) == {"Acme", "Acme Corp"}
 
@@ -189,7 +204,7 @@ def test_merge_entities_curated_matches_reference_semantics(graph):
     # Acme–AcmeCorp becomes a self-loop: skipped. The two Bob edges collide.
     assert set(r) == {("Acme", "Bob"), ("Bob", "Zed")}
     collided = r[("Acme", "Bob")]
-    ref_rel = REF_RELATION_MERGE(
+    ref_rel = reference.relation_merge(
         [
             {"description": "works at", "keywords": "job", "source_id": "c1", "weight": 2.0},
             {"description": "employed by", "keywords": "work", "source_id": "c2", "weight": 4.0},
@@ -200,8 +215,8 @@ def test_merge_entities_curated_matches_reference_semantics(graph):
     assert set(collided["description"].split("\n\n")) == set(
         ref_rel["description"].split("\n\n")
     )
-    assert set(collided["keyword_arr"]) == set(ref_rel["keywords"].split(REF_SEP))
-    assert set(collided["source_ids"]) == set(ref_rel["source_id"].split(REF_SEP))
+    assert set(collided["keyword_arr"]) == set(ref_rel["keywords"].split(reference.sep))
+    assert set(collided["source_ids"]) == set(ref_rel["source_id"].split(reference.sep))
     # untouched edge intact
     assert r[("Bob", "Zed")]["weight"] == 1.0
 
@@ -342,7 +357,7 @@ def test_kgengine_curation_wiring(spark, tmp_path):
     )
 
 
-def test_merge_matrix_randomized_fuzz_vs_reference():
+def test_merge_matrix_randomized_fuzz_vs_reference(reference):
     """500 randomized (data_list, strategy) cases per variant against the
     executed reference functions — catches interaction bugs the fixed
     matrix misses (falsy filtering x strategy, SEP-embedded values, mixed
@@ -367,7 +382,7 @@ def test_merge_matrix_randomized_fuzz_vs_reference():
         if r < 0.35:
             return rng.choice([0, 0.0, 1, 2.5, "3.5", "not-a-number"])
         parts = [f"v{rng.randint(0, 5)}" for _ in range(rng.randint(1, 3))]
-        return REF_SEP.join(parts) if rng.random() < 0.4 else " ".join(parts)
+        return reference.sep.join(parts) if rng.random() < 0.4 else " ".join(parts)
 
     for trial in range(500):
         data_list = [
@@ -384,13 +399,15 @@ def test_merge_matrix_randomized_fuzz_vs_reference():
         ]
         _agree(
             merge_entity_attributes(ent_list, strategy),
-            REF_ENTITY_MERGE(ent_list, strategy),
+            reference.entity_merge(ent_list, strategy),
             strategy,
+            reference.sep,
         )
         # the relation variant str()-casts and has the numeric max branch —
         # mixed types exercise it as-is
         _agree(
             merge_relation_attributes(data_list, strategy),
-            REF_RELATION_MERGE(data_list, strategy),
+            reference.relation_merge(data_list, strategy),
             strategy,
+            reference.sep,
         )

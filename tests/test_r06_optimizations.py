@@ -6,7 +6,8 @@
   path, pair by pair;
 * the scale-adaptive scan spread repartitions a too-small-to-split file to
   defaultParallelism, leaves big-enough inputs alone, and never changes
-  query results.
+  query results; it reads the split size as Spark parsed it, so every
+  byte-size form Spark accepts works.
 """
 
 import pyspark.sql.functions as F
@@ -85,6 +86,22 @@ def test_spread_scan_parallelism_and_gating(spark, sf_dir):
         untouched = _spread_scan(spark, spark.read.parquet(path), path, "doc_id")
         # the returned plan must be the scan itself (no Repartition node)
         assert "repartition" not in untouched._jdf.queryExecution().logical().toString().lower()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+@pytest.mark.parametrize("mpb, spreads", [("1t", True), ("512b", False)])
+def test_spread_scan_reads_spark_parsed_split_size(spark, sf_dir, mpb, spreads):
+    """Size suffixes Spark accepts (`t`, a bare `b`) are read as Spark
+    parsed them: 1t spreads the small file, 512b splits it enough."""
+    from aperag_spark.queries import _spread_scan
+
+    path = f"{sf_dir}/documents.parquet"
+    df = spark.read.parquet(path)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+        assert (_spread_scan(spark, df, path, "doc_id") is not df) == spreads
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

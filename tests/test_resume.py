@@ -1,19 +1,29 @@
 """Resume/idempotency (north rule): a job killed between stages resumes
 without recomputing completed stages and reproduces byte-identical outputs;
-corrupted manifests trigger recompute, not bad reads."""
+corrupted manifests trigger recompute, not bad reads; a stage without a
+complete manifest is never served."""
 
+import glob
 import hashlib
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
-from aperag_spark.plans.pipeline import pipeline_metrics, run_pipeline
+from aperag_spark.api import KGEngine
+from aperag_spark.operators.chunking import chunk_texts
+from aperag_spark.plans.pipeline import (
+    _read_stage,
+    _write_stage,
+    pipeline_metrics,
+    run_pipeline,
+)
 from aperag_spark.synth import gen_pages_df
 
 
 def _table_hash(spark, path):
-    rows = sorted(map(str, spark.read.parquet(path).drop("_pid").collect()))
+    rows = sorted(map(str, spark.read.parquet(path).collect()))
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
@@ -72,4 +82,28 @@ def test_manifests_record_per_partition_lineage(spark, pages, tmp_path):
     for stage in ["texts", "chunks", "mentions", "entities", "relations"]:
         m = metrics[stage]
         assert m["rows"] == sum(m["partitions"].values())
+        assert m["rows"] == spark.read.parquet(f"{out}/{stage}").count()
         assert m["input_fingerprint"] == "v" and m["wall_sec"] > 0
+        files = glob.glob(f"{out}/{stage}/part-*")
+        assert files and all("_pid" not in pq.read_schema(f).names for f in files)
+
+    # the counts come from the written files' footers: writing a narrow stage
+    # is the write job alone, with no re-read or count job after it
+    sc = spark.sparkContext
+    chunks = chunk_texts(_read_stage(spark, out, "texts"))
+    sc.setJobGroup("one-stage-write", "chunks stage write")
+    try:
+        _write_stage(chunks, str(tmp_path / "rewrite"), "chunks", "v")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("one-stage-write")) == 1
+
+
+def test_reads_require_a_complete_manifest(spark, pages, tmp_path):
+    out = str(tmp_path / "gate")
+    run_pipeline(spark, pages, out, input_fingerprint="v")
+    assert KGEngine(spark, out).entities.count() > 0
+    os.remove(os.path.join(out, "entities_canonical", "_MANIFEST.json"))
+    with pytest.raises(ValueError, match="not built yet"):
+        KGEngine(spark, out).entities
